@@ -47,7 +47,9 @@ def atomic_overwrite_parquet(
     window between them, and a crash between the renames leaves the data
     in the ``.old-*`` sibling (recovery: rename it back). True atomicity
     needs a symlink/manifest indirection — out of scope for a local
-    metadata dir."""
+    metadata dir. ``FeatureStore`` readers on the writing handle never
+    read the metadata directory mid-swap: they answer from the handle's
+    catalog, which the writer installs after the swap."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
     for name, content in (extra_files or {}).items():

@@ -11,17 +11,27 @@ Pipeline.py:229-541`) on Spark:
   helped by sorting within partitions at write).
 - the ``feature_metadata`` table (`:282-292`) → a tiny typed parquet table,
   upserted read-modify-write through an atomic directory swap (A5 has no
-  parquet INSERT OR REPLACE).
+  parquet INSERT OR REPLACE). Each handle keeps the table's rows in driver
+  memory as a catalog, written through on every swap and checked against
+  the directory's identity on every read, so resolving a version is plain
+  Python (the reference's sub-millisecond SQLite query, `:373-380`) rather
+  than a Spark job.
 - asyncio/aiosqlite (`:261, :317, :373`) → not replicated: Spark supplies
   the parallelism; the public API is synchronous (SURVEY §3.4).
 """
 
 from __future__ import annotations
 
+import copy
 import datetime as _dt
 import os
+import threading
+import time
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,9 +44,34 @@ from .sources.writers import atomic_overwrite_parquet, drop_partition_dirs, list
 from .versioning import content_version
 
 
+#: how long a read waits out another writer's metadata swap before raising
+_SWAP_WAIT_S = 10.0
+_SWAP_POLL_S = 0.005
+
+
 def _utc_now_iso() -> str:
     """ISO-8601 UTC stamp (reference H2 `:634`) — lexicographic == chronological."""
     return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None).isoformat()
+
+
+def _dir_identity(path: str) -> tuple[int, int, int] | None:
+    """Inode and mtime/ctime of a directory: every atomic swap changes it.
+    None while the directory does not exist."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return (st.st_ino, st.st_mtime_ns, st.st_ctime_ns)
+
+
+def _newest_first(rows: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """created_at desc with nulls last, then version desc: the order
+    latest_version(), version_as_of() and retention resolve by."""
+    return sorted(
+        rows,
+        key=lambda r: (r[CREATED_AT_COLUMN] is not None, r[CREATED_AT_COLUMN] or "", r[VERSION_COLUMN]),
+        reverse=True,
+    )
 
 
 class FeatureStore:
@@ -64,6 +99,11 @@ class FeatureStore:
         self.monitor = FeatureMonitor(alert_threshold=alert_threshold)
         self.sort_col = sort_within_partitions_by
         self.max_serving_index_rows = max_serving_index_rows
+        # metadata catalog: (identity of the directory the rows were read
+        # from or written to, rows newest first); replaced as one tuple so
+        # lock-free readers never see a torn pair
+        self._catalog: tuple[tuple[int, int, int] | None, list[dict[str, Any]]] | None = None
+        self._catalog_lock = threading.RLock()
         os.makedirs(path, exist_ok=True)
 
     # ------------------------------------------------------------------ K1
@@ -90,8 +130,12 @@ class FeatureStore:
         # for the register's duration only — a within-run pin of an
         # intermediate (the ivf_build pattern), never a cross-run cache —
         # and unpersist in finally so the store never holds storage
-        # memory past the call.
-        features = features.persist()
+        # memory past the call. A frame the caller already persisted is
+        # used as is and left cached: re-persisting at another level
+        # raises, and unpersisting would evict the caller's cache.
+        persisted_here = features.storageLevel == StorageLevel.NONE
+        if persisted_here:
+            features.persist()
         try:
             metrics, _prof = self.validator.validate(features)
             version = content_version(features)
@@ -145,7 +189,8 @@ class FeatureStore:
             # from the second access on).
             return version
         finally:
-            features.unpersist()
+            if persisted_here:
+                features.unpersist()
 
     def _check_schema(self, features: DataFrame, metadata: FeatureMetadata) -> None:
         """Declared configs must exist in the frame with the declared dtype."""
@@ -167,61 +212,110 @@ class FeatureStore:
             raise ValueError("feature schema mismatch: " + "; ".join(problems))
 
     def _upsert_metadata(self, metadata: FeatureMetadata) -> None:
-        """A5: INSERT OR REPLACE ≈ filter-out + union + atomic overwrite."""
-        d = metadata.to_dict()
-        new_row = self.spark.createDataFrame([d], schema=METADATA_SCHEMA)
-        existing = self._read_metadata()
-        if existing is not None:
-            merged = existing.filter(
-                F.col(VERSION_COLUMN) != metadata.feature_version
-            ).unionByName(new_row)
-        else:
-            merged = new_row
-        # materialize before the swap — the plan must not read the dir being replaced
-        rows = merged.collect()
-        merged_df = self.spark.createDataFrame(rows, schema=METADATA_SCHEMA)
-        atomic_overwrite_parquet(merged_df, self.metadata_path)
+        """A5: INSERT OR REPLACE ≈ filter-out + append + atomic overwrite."""
+        with self._catalog_lock:
+            rows = [r for r in self._metadata_rows() if r[VERSION_COLUMN] != metadata.feature_version]
+            self._write_metadata(rows + [metadata.to_dict()])
+
+    def _write_metadata(self, rows: list[dict[str, Any]]) -> None:
+        """Write-through, under ``_catalog_lock``: swap the table in, then
+        install the same rows as the catalog under the new directory's
+        identity. SINGLE-WRITER, like the swap itself: a second writer
+        swapping between our rename and our stat would leave this handle's
+        catalog describing our rows."""
+        atomic_overwrite_parquet(
+            self.spark.createDataFrame(rows, schema=METADATA_SCHEMA), self.metadata_path
+        )
+        self._catalog = (_dir_identity(self.metadata_path), _newest_first(rows))
 
     def _read_metadata(self) -> DataFrame | None:
         if not os.path.isdir(self.metadata_path):
             return None
         return self.spark.read.schema(METADATA_SCHEMA).parquet(self.metadata_path)
 
+    def _metadata_rows(self) -> list[dict[str, Any]]:
+        """The metadata table, newest first, answered from the catalog.
+
+        Every call stats the directory (microseconds) and trusts the catalog
+        only while the identity is the one it was written or read under, so
+        a publish from another handle or process shows on the next call.
+        While the directory is missing — another writer between its two
+        renames — the catalog (the table before that swap) answers. Without
+        a catalog, a missing directory is an empty store unless a
+        ``.tmp-*``/``.old-*`` sibling shows a swap in flight, which is
+        waited out rather than reported as empty."""
+        deadline = time.monotonic() + _SWAP_WAIT_S
+        while True:
+            ident = _dir_identity(self.metadata_path)
+            catalog = self._catalog
+            if catalog is not None and (ident is None or catalog[0] == ident):
+                return catalog[1]
+            if ident is None and not self._swap_in_flight():
+                return []
+            with self._catalog_lock:  # also waits out a write-through on this handle
+                if self._catalog is not catalog:
+                    continue  # a write-through or reload landed meanwhile
+                rows = self._reload_catalog(ident) if ident is not None else None
+            if rows is not None:
+                return rows
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"{self.metadata_path} kept changing or stayed missing beside a "
+                    f"swap leftover for {_SWAP_WAIT_S} s; if no writer is running, "
+                    "rename the .old-* sibling back to recover the table"
+                )
+            time.sleep(_SWAP_POLL_S)
+
+    def _reload_catalog(self, ident: tuple[int, int, int]) -> list[dict[str, Any]] | None:
+        """One Spark read of the directory; None if it was swapped meanwhile
+        (the rows could be either table's, or the read lost its files)."""
+        try:
+            meta = self._read_metadata()
+            rows = None if meta is None else [r.asDict(recursive=True) for r in meta.collect()]
+        except (PySparkException, Py4JJavaError):
+            # a swap removed the files Spark listed; any other failure is real
+            if _dir_identity(self.metadata_path) != ident:
+                return None
+            raise
+        if rows is None or _dir_identity(self.metadata_path) != ident:
+            return None
+        rows = _newest_first(rows)
+        self._catalog = (ident, rows)
+        return rows
+
+    def _swap_in_flight(self) -> bool:
+        name = os.path.basename(self.metadata_path)
+        try:
+            return any(n.startswith((f"{name}.tmp-", f"{name}.old-")) for n in os.listdir(self.path))
+        except FileNotFoundError:
+            return False
+
     # ------------------------------------------------------------------ K2
     def latest_version(self) -> str | None:
-        """F1 `:373-380`: top-1 by created_at (TakeOrderedAndProject, no full
-        sort). Version hash desc breaks created_at ties (two registrations
-        in one microsecond, or an explicit backfilled timestamp) so
-        resolution is deterministic rather than partition-order luck — but
-        it is NOT registration order: two different-content registrations
-        carrying an EQUAL explicit created_at are unordered in this
-        schema, so give corrected backfills a strictly later stamp (a
-        monotonic registration sequence column is the schema-vNext fix)."""
-        meta = self._read_metadata()
-        if meta is None:
-            return None
-        head = (
-            meta.orderBy(F.desc(CREATED_AT_COLUMN), F.desc(VERSION_COLUMN))
-            .limit(1)
-            .collect()
-        )
-        return head[0][VERSION_COLUMN] if head else None
+        """F1 `:373-380`: top-1 by created_at, from the metadata catalog (no
+        Spark job). Version hash desc breaks created_at ties (two
+        registrations in one microsecond, or an explicit backfilled
+        timestamp) so resolution is deterministic — but it is NOT
+        registration order: two different-content registrations carrying
+        an EQUAL explicit created_at are unordered in this schema, so give
+        corrected backfills a strictly later stamp (a monotonic
+        registration sequence column is the schema-vNext fix)."""
+        rows = self._metadata_rows()
+        return rows[0][VERSION_COLUMN] if rows else None
 
     def version_as_of(self, as_of: str) -> str | None:
         """Time-travel resolution: the version that was latest at ``as_of``
         (ISO-8601 UTC, same format as the stamped created_at) — what a
         training job reads to reproduce the features a past run saw.
-        Top-1 over the filtered metadata table; no data-scale scan."""
-        meta = self._read_metadata()
-        if meta is None:
-            return None
-        head = (
-            meta.filter(F.col(CREATED_AT_COLUMN) <= as_of)
-            .orderBy(F.desc(CREATED_AT_COLUMN), F.desc(VERSION_COLUMN))
-            .limit(1)
-            .collect()
+        First catalog row stamped at or before ``as_of``; no Spark job."""
+        return next(
+            (
+                r[VERSION_COLUMN]
+                for r in self._metadata_rows()
+                if r[CREATED_AT_COLUMN] is not None and r[CREATED_AT_COLUMN] <= as_of
+            ),
+            None,
         )
-        return head[0][VERSION_COLUMN] if head else None
 
     def get_features(
         self,
@@ -381,8 +475,10 @@ class FeatureStore:
         invalidated on re-registration — TTL-only expiry (reference
         `:350,412`) — so a version's cached frames can lag the DB's rows
         for that version by up to 3600 s. Here that window is ZERO: the
-        serving index is version-scoped, ``latest_version()`` is never
-        cached, and re-registration rebuilds the index — a stale index
+        serving index is version-scoped, ``latest_version()`` resolves
+        from a metadata catalog that is written through on every publish
+        and checked against the metadata directory's identity on every
+        call, and re-registration rebuilds the index — a stale index
         can only be served if it is planted under the new version's key,
         which this audit detects as a full-sample mismatch
         (``test_serving_parity_audit_detects_stale_cache_epoch``)."""
@@ -418,20 +514,15 @@ class FeatureStore:
 
     # ------------------------------------------------------------------ K4
     def get_feature_metadata(self, version: str) -> FeatureMetadata | None:
-        """A7 point lookup (reference `:456-475`)."""
-        meta = self._read_metadata()
-        if meta is None:
-            return None
-        rows = meta.filter(F.col(VERSION_COLUMN) == version).limit(1).collect()
-        if not rows:
-            return None
-        return self._metadata_from_row(rows[0])
+        """A7 point lookup (reference `:456-475`), from the catalog."""
+        row = next((r for r in self._metadata_rows() if r[VERSION_COLUMN] == version), None)
+        return self._metadata_from_dict(row) if row is not None else None
 
     @staticmethod
-    def _metadata_from_row(row: Row) -> FeatureMetadata:
+    def _metadata_from_dict(row: dict[str, Any]) -> FeatureMetadata:
         from .config import FeatureConfig
 
-        d = row.asDict(recursive=True)
+        d = copy.deepcopy(row)  # callers must not mutate the catalog's row
         return FeatureMetadata(
             feature_version=d[VERSION_COLUMN],
             description=d.get("description") or "",
@@ -446,11 +537,8 @@ class FeatureStore:
 
     # ------------------------------------------------------------------ K5
     def list_feature_versions(self) -> list[dict[str, Any]]:
-        """A8/F2 ordered listing (reference `:481-497`)."""
-        meta = self._read_metadata()
-        if meta is None:
-            return []
-        rows = meta.orderBy(F.desc(CREATED_AT_COLUMN)).collect()
+        """A8/F2 ordered listing (reference `:481-497`), newest first, from
+        the catalog."""
         return [
             {
                 "feature_version": r[VERSION_COLUMN],
@@ -463,32 +551,29 @@ class FeatureStore:
                 ),
                 "tags": list(r["tags"] or []),
             }
-            for r in rows
+            for r in self._metadata_rows()
         ]
 
     # ------------------------------------------------------------------ K6
     def cleanup_old_versions(self, keep_n: int = 5) -> list[str]:
-        """Keep newest N versions (reference `:503-528`). Physical delete is a
-        partition-directory drop — no data rewrite; metadata rows filtered via
-        the same atomic overwrite as the upsert."""
-        versions = [v["feature_version"] for v in self.list_feature_versions()]  # newest first
-        doomed = versions[keep_n:]
-        if not doomed:
-            return []
-        drop_partition_dirs(self.features_path, VERSION_COLUMN, doomed)
-        meta = self._read_metadata()
-        if meta is not None:
-            kept = meta.filter(~F.col(VERSION_COLUMN).isin(doomed))
-            rows = kept.collect()
-            atomic_overwrite_parquet(
-                self.spark.createDataFrame(rows, schema=METADATA_SCHEMA), self.metadata_path
-            )
+        """Keep newest N versions (reference `:503-528`). Files go last: the
+        kept metadata rows are written first (through the same atomic
+        overwrite as the upsert), so no resolution returns a doomed version
+        from then on; then the cache is evicted; then the partition
+        directories are dropped — no data rewrite."""
+        with self._catalog_lock:
+            rows = self._metadata_rows()  # newest first
+            doomed = [r[VERSION_COLUMN] for r in rows[keep_n:]]
+            if not doomed:
+                return []
+            self._write_metadata(rows[:keep_n])
         for v in doomed:
             delete_prefix = getattr(self.cache, "delete_prefix", None)
             if delete_prefix is not None:
                 delete_prefix(cache_key(v))
             else:
                 self.cache.delete(cache_key(v))
+        drop_partition_dirs(self.features_path, VERSION_COLUMN, doomed)
         return doomed
 
     # ------------------------------------------------------------------ K7

@@ -459,3 +459,182 @@ def test_backfill_created_at_stamps_rows_and_metadata_identically(spark, tmp_pat
     ).collect()
     assert {r["created_at"] for r in raw} == {back}
     assert store.version_as_of("2023-07-01T00:00:00") == v
+
+
+def test_serves_during_publish_never_raise_or_go_stale(spark, tmp_path):
+    """Serving beside a publish: two threads serve latest on the writing
+    handle and a second handle resolves latest while a third thread
+    registers a new version. No call may raise (a Spark read racing the
+    directory swap raises FileNotFoundException), and no call that starts
+    after the register returns may see the old version — on the second
+    handle that holds through invalidation by the metadata directory's
+    identity."""
+    import sys
+    import threading
+    import time as _time
+
+    path = str(tmp_path / "fs_race")
+    store = FeatureStore(spark, path)
+    other = FeatureStore(spark, path)
+    ids = range(40)
+    df1 = spark.createDataFrame([(i, float(i)) for i in ids], "user_id long, x double")
+    df2 = spark.createDataFrame([(i, i + 1000.0) for i in ids], "user_id long, x double")
+    v1 = store.register_features(df1, _meta("race v1"))
+    assert store.serve_features(3)["x"] == 3.0
+    assert other.latest_version() == v1  # warms the second handle's catalog
+
+    published = threading.Event()
+    deadline = _time.monotonic() + 120
+    errors: list[Exception] = []
+    wrong: list[str] = []
+    post_calls: list[tuple[str, int]] = []
+    v2: list[str] = []
+
+    def serve(uid: int) -> None:
+        post = 0
+        while post < 10 and _time.monotonic() < deadline:
+            after = published.is_set()
+            try:
+                x = store.serve_features(uid)["x"]
+            except Exception as e:  # any raise fails the test
+                errors.append(e)
+                return
+            if after:
+                post += 1
+                if x != uid + 1000.0:
+                    wrong.append(f"stale serve of user {uid} after the publish: {x}")
+            elif x not in (float(uid), uid + 1000.0):
+                wrong.append(f"user {uid} matches no version: {x}")
+        post_calls.append(("serve", post))
+
+    def resolve_other() -> None:
+        post = 0
+        while post < 5 and _time.monotonic() < deadline:
+            after = published.is_set()
+            try:
+                got = other.latest_version()
+            except Exception as e:
+                errors.append(e)
+                return
+            if after:
+                post += 1
+                if got != v2[0]:
+                    wrong.append(f"second handle resolved {got} after the publish")
+        post_calls.append(("other", post))
+
+    def publish() -> None:
+        try:
+            v2.append(store.register_features(df2, _meta("race v2")))
+        except Exception as e:
+            errors.append(e)
+        finally:
+            published.set()
+
+    threads = [threading.Thread(target=serve, args=(u,)) for u in (3, 7)]
+    threads += [threading.Thread(target=resolve_other), threading.Thread(target=publish)]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=150)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and wrong == []
+    assert sorted(post_calls) == [("other", 5), ("serve", 10), ("serve", 10)]
+    assert v2[0] != v1 and store.latest_version() == v2[0]
+    # a third handle opened now reads the same table from disk
+    assert FeatureStore(spark, path).list_feature_versions() == store.list_feature_versions()
+
+
+def test_warm_metadata_reads_start_no_spark_job(spark, store, features):
+    """The hot path runs no Spark job: on a warm handle, resolving latest,
+    serving index hits, listing versions and reading a version's metadata
+    are all answered from driver memory."""
+    import uuid
+
+    v = store.register_features(features, _meta())
+    assert store.serve_features(1)["total_events"] == 3  # builds the serving index
+    sc = spark.sparkContext
+    group = f"catalog-guard-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "warm metadata reads must run no job")
+    try:
+        for _ in range(50):
+            assert store.latest_version() == v
+        for i in range(50):
+            assert store.serve_features(1 + i % 5)["user_id"] == 1 + i % 5
+        assert [r["feature_version"] for r in store.list_feature_versions()] == [v]
+        assert store.get_feature_metadata(v).description == "test features"
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(3).count()  # control: a job under the group is seen
+        control = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert len(control) >= 1
+
+
+def test_cleanup_retires_metadata_before_dropping_files(spark, tmp_path, features, monkeypatch):
+    """Retention writes the kept metadata and evicts the cache BEFORE it
+    drops partition directories, so no resolution — on this handle or a
+    fresh one reading the directory — returns a version whose files are
+    being deleted; afterwards, a timestamp inside a dropped version's
+    lifetime resolves to nothing."""
+    from ml_feature_store_pipeline_spark import store as store_mod
+    from ml_feature_store_pipeline_spark.cache import cache_key
+
+    path = str(tmp_path / "fs_retire")
+    store = FeatureStore(spark, path)
+    stamps = ["2024-01-01T00:00:00", "2024-02-01T00:00:00", "2024-03-01T00:00:00"]
+    versions = [
+        store.register_features(
+            features.withColumn("total_amount", F.col("total_amount") + i),
+            FeatureMetadata(description=f"m{i}", created_at=stamp),
+        )
+        for i, stamp in enumerate(stamps)
+    ]
+    store.serve_features(1, version=versions[0])  # a cached index to evict
+    inside_dropped = "2024-01-15T00:00:00"
+    assert store.version_as_of(inside_dropped) == versions[0]
+
+    seen = {}
+    real_drop = store_mod.drop_partition_dirs
+
+    def drop_spy(store_path, col, values):
+        seen["values"] = list(values)
+        seen["as_of"] = store.version_as_of(inside_dropped)
+        seen["as_of_fresh"] = FeatureStore(spark, path).version_as_of(inside_dropped)
+        seen["meta"] = [store.get_feature_metadata(v) for v in values]
+        seen["cached"] = store.cache.get(cache_key(versions[0]) + "_serving_index")
+        return real_drop(store_path, col, values)
+
+    monkeypatch.setattr(store_mod, "drop_partition_dirs", drop_spy)
+    doomed = store.cleanup_old_versions(keep_n=1)
+    assert set(doomed) == set(versions[:2]) == set(seen["values"])
+    assert seen["as_of"] is None and seen["as_of_fresh"] is None
+    assert seen["meta"] == [None, None] and seen["cached"] is None
+    assert store.version_as_of(inside_dropped) is None
+    assert store.version_as_of("2024-02-15T00:00:00") is None
+    assert store.version_as_of("2024-03-15T00:00:00") == versions[2]
+
+
+def test_register_leaves_caller_persisted_frame_cached(store):
+    """register_features pins an unpersisted input for its own duration
+    only, and never changes or evicts a frame the caller persisted."""
+    from pyspark import StorageLevel
+
+    spark = store.spark
+    mine = spark.createDataFrame([(1, 1.0), (2, 2.0)], "user_id long, x double")
+    mine.persist(StorageLevel.MEMORY_ONLY)
+    try:
+        mine.count()
+        store.register_features(mine, _meta("caller-persisted"))
+        assert mine.storageLevel == StorageLevel.MEMORY_ONLY
+    finally:
+        mine.unpersist()
+    plain = spark.createDataFrame([(1, 5.0)], "user_id long, x double")
+    store.register_features(plain, _meta("plain"))
+    assert plain.storageLevel == StorageLevel.NONE

@@ -63,9 +63,8 @@ def main() -> None:
     # staleness SLA in the lifecycle: register → serve → re-register →
     # serve must flip to v2 IMMEDIATELY (the serving index is
     # version-scoped, and latest_version() resolves from a metadata
-    # catalog that is written through on every publish and checked
-    # against the metadata directory's identity on every call — unlike
-    # the reference's TTL cache, whose entries are never invalidated on
+    # catalog that every call brings up to date with the commit log —
+    # unlike the reference's TTL cache, whose entries are never invalidated on
     # re-registration and can lag a version's DB rows by up to 3600 s).
     v2_rows = store.get_features(v2, use_cache=False)
     fresh_user = v2_rows.select("user_id").limit(1).collect()[0][0]

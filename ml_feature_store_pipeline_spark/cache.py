@@ -1,8 +1,8 @@
 """TTL result cache (reference J4: ``CacheBackend``/``InMemoryCache``,
 `ML Feature Store Pipeline.py:70-111`).
 
-Driver-side memoization of materialized results, keyed exactly like the
-reference (`features_{version}[_users_{ids}]`, `:382-384`). The reference's
+Driver-side memoization of materialized results, keyed by version with the
+reference's ``features_{version}`` prefix (`:382-384`). The reference's
 async interface collapses to sync — Spark supplies the parallelism. For
 cluster-side reuse of a hot DataFrame use ``df.persist()``; this cache is
 for serving-path results that have already been collected.
@@ -14,7 +14,6 @@ import logging
 import threading
 import time
 from abc import ABC, abstractmethod
-from collections.abc import Iterable
 from typing import Any
 
 _LOG = logging.getLogger(__name__)
@@ -217,9 +216,6 @@ class DiskTTLCache(CacheBackend):
             }
 
 
-def cache_key(version: str, user_ids: Iterable[int] | None = None) -> str:
-    """Reference key format (`:382-384`)."""
-    key = f"features_{version}"
-    if user_ids is not None:
-        key += "_users_" + "_".join(map(str, user_ids))
-    return key
+def cache_key(version: str) -> str:
+    """Reference key format (`:382-384`) for a version's entries."""
+    return f"features_{version}"

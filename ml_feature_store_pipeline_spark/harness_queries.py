@@ -1386,9 +1386,8 @@ def q_serving_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `:350,412`) — so a version's cached frames can lag that version's DB
     rows by up to 3600 s; this store's window is ZERO because the
     serving index is version-scoped, latest_version() resolves from a
-    metadata catalog that is written through on every publish and
-    checked against the metadata directory's identity on every call,
-    and re-registration rebuilds the index, so the audit of `latest`
+    metadata catalog that every call brings up to date with the store's
+    commit log, and re-registration rebuilds the index, so the audit of `latest`
     always compares against the version that should be served. The result frame is built from the report
     dict, so it has no lineage into the temp store, which is deleted
     before returning."""

@@ -8,6 +8,7 @@ needs executor-side counting, use SparkContext accumulators instead.)
 
 from __future__ import annotations
 
+import threading
 import time
 from typing import Any
 
@@ -17,12 +18,14 @@ class FeatureMonitor:
         # alert threshold is configurable here; hardcoded 0.8 in the reference `:217`
         self.alert_threshold = alert_threshold
         self.access_counts: dict[str, int] = {}
+        self._access_lock = threading.Lock()  # serving threads count concurrently
         self.creation_records: list[dict[str, Any]] = []
         self.alerts: list[str] = []
 
     def log_feature_access(self, version: str, n_users: int | None = None) -> None:
         """Access counter increment (reference `:206-209`)."""
-        self.access_counts[version] = self.access_counts.get(version, 0) + 1
+        with self._access_lock:
+            self.access_counts[version] = self.access_counts.get(version, 0) + 1
 
     def log_feature_creation(self, version: str, n_rows: int, quality_score: float) -> None:
         """Creation record + low-quality alert (reference `:211-220`)."""
@@ -40,9 +43,11 @@ class FeatureMonitor:
             )
 
     def get_metrics(self) -> dict[str, Any]:
+        with self._access_lock:
+            access_counts = dict(self.access_counts)
         return {
-            "access_counts": dict(self.access_counts),
+            "access_counts": access_counts,
             "creation_records": list(self.creation_records),
-            "total_accesses": sum(self.access_counts.values()),
+            "total_accesses": sum(access_counts.values()),
             "total_creations": len(self.creation_records),
         }

@@ -46,40 +46,6 @@ FEATURES_SCHEMA = T.StructType(
 VERSION_COLUMN = "feature_version"
 CREATED_AT_COLUMN = "created_at"
 
-#: Typed metadata table — the reference stores these as JSON TEXT blobs in
-#: SQLite (`:282-292`, json.dumps at `:337-340`); we use typed columns.
-FEATURE_CONFIG_STRUCT = T.StructType(
-    [
-        T.StructField("name", T.StringType(), False),
-        T.StructField("dtype", T.StringType(), False),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("tags", T.ArrayType(T.StringType()), True),
-        T.StructField("owner", T.StringType(), True),
-    ]
-)
-
-QUALITY_METRICS_STRUCT = T.StructType(
-    [
-        T.StructField("null_percentage", T.DoubleType(), True),
-        T.StructField("duplicate_percentage", T.DoubleType(), True),
-        T.StructField("outlier_percentage", T.DoubleType(), True),
-        T.StructField("schema_violations", T.IntegerType(), True),
-        T.StructField("overall_score", T.DoubleType(), True),
-    ]
-)
-
-METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField(VERSION_COLUMN, T.StringType(), False),
-        T.StructField("description", T.StringType(), True),
-        T.StructField(CREATED_AT_COLUMN, T.StringType(), True),
-        T.StructField("features_config", T.ArrayType(FEATURE_CONFIG_STRUCT), True),
-        T.StructField("data_quality_metrics", QUALITY_METRICS_STRUCT, True),
-        T.StructField("lineage", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("tags", T.ArrayType(T.StringType()), True),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Driver-provided test tables (TESTDATA.md / FIXTURES.md §2)
 # ---------------------------------------------------------------------------

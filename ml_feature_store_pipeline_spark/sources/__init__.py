@@ -1,10 +1,9 @@
 from .readers import read_csv_events, read_table, read_tables
-from .writers import atomic_overwrite_parquet, write_csv
+from .writers import atomic_overwrite_parquet
 
 __all__ = [
     "read_csv_events",
     "read_table",
     "read_tables",
-    "write_csv",
     "atomic_overwrite_parquet",
 ]

@@ -1,9 +1,11 @@
-"""Sinks: CSV/parquet writers + atomic small-table overwrite (SURVEY §2.A).
+"""Sinks: parquet/JSON/ORC/bucketed writers, partition drops and small-file
+compaction (SURVEY §2.A).
 
-``atomic_overwrite_parquet`` implements the A5 metadata-upsert pattern:
-parquet has no ``INSERT OR REPLACE`` (`ML Feature Store Pipeline.py:329-341`),
-so the (tiny) metadata table is rewritten via temp-path + rename — readers
-never observe a half-written table.
+``atomic_overwrite_parquet`` replaces a small driver-managed table whole,
+through a temp-dir write and a two-rename swap; the streaming sinks
+(``streaming.ingest``) commit their state tables and epoch markers with it.
+The feature store's metadata is not a table: ``FeatureStore`` keeps it in
+an append-only JSON commit log.
 """
 
 from __future__ import annotations
@@ -15,25 +17,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink (reference A2 `:606`)."""
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
-def write_partitioned(df: DataFrame, path: str, *partition_cols: str, mode: str = "append") -> None:
-    """Feature sink (reference A4 `:317-326`): append = new partition dirs;
-    version reads prune to one directory subtree."""
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-
-
 def atomic_overwrite_parquet(
     df: DataFrame, path: str, *, extra_files: dict[str, str] | None = None
 ) -> None:
     """Overwrite a SMALL table via a temp-dir write + two-rename swap.
-    Only for driver-managed small tables (metadata); big tables use
+    Used by the streaming sinks for their state tables; big tables use
     partition-level operations instead.
 
     ``extra_files`` maps ``_``-prefixed sidecar names to text contents
@@ -46,10 +34,8 @@ def atomic_overwrite_parquet(
     (path→old, tmp→path), so a concurrent reader can hit a brief ENOENT
     window between them, and a crash between the renames leaves the data
     in the ``.old-*`` sibling (recovery: rename it back). True atomicity
-    needs a symlink/manifest indirection — out of scope for a local
-    metadata dir. ``FeatureStore`` readers on the writing handle never
-    read the metadata directory mid-swap: they answer from the handle's
-    catalog, which the writer installs after the swap."""
+    needs a symlink/manifest indirection — out of scope for a sink's
+    local state directory, which only its own micro-batches write."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
     for name, content in (extra_files or {}).items():
@@ -87,10 +73,6 @@ def list_partition_values(store_path: str, partition_col: str) -> list[str]:
         for d in os.listdir(store_path)
         if d.startswith(prefix) and os.path.isdir(os.path.join(store_path, d))
     )
-
-
-def spark_for(df: DataFrame) -> SparkSession:
-    return df.sparkSession
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -9,13 +9,13 @@ Pipeline.py:229-541`) on Spark:
   100 TB the intended-but-broken SQLite indexes (`:277-278`) become
   partition pruning (version) + parquet row-group min/max stats (user_id,
   helped by sorting within partitions at write).
-- the ``feature_metadata`` table (`:282-292`) → a tiny typed parquet table,
-  upserted read-modify-write through an atomic directory swap (A5 has no
-  parquet INSERT OR REPLACE). Each handle keeps the table's rows in driver
-  memory as a catalog, written through on every swap and checked against
-  the directory's identity on every read, so resolving a version is plain
-  Python (the reference's sub-millisecond SQLite query, `:373-380`) rather
-  than a Spark job.
+- the ``feature_metadata`` table (`:282-292`) → an append-only log of JSON
+  records in ``_log/``, one per publish (``put`` = INSERT OR REPLACE) or
+  retention (``drop``), each created put-if-absent under its sequence
+  number (Delta Lake's commit log). Each handle folds the log into a
+  driver-memory catalog and checks for the next record on every read, so
+  resolving a version is plain Python (the reference's sub-millisecond
+  SQLite query, `:373-380`) and concurrent writers lose no commit.
 - asyncio/aiosqlite (`:261, :317, :373`) → not replicated: Spark supplies
   the parallelism; the public API is synchronous (SURVEY §3.4).
 """
@@ -24,14 +24,14 @@ from __future__ import annotations
 
 import copy
 import datetime as _dt
+import json
 import os
 import threading
-import time
+import uuid
+from collections.abc import Callable
 from typing import Any
 
-from py4j.protocol import Py4JJavaError
 from pyspark import StorageLevel
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,14 +39,9 @@ from .cache import CacheBackend, InMemoryTTLCache, cache_key
 from .config import DataQualityMetrics, FeatureMetadata
 from .monitor import FeatureMonitor
 from .quality import DataQualityValidator
-from .schemas import CREATED_AT_COLUMN, METADATA_SCHEMA, VERSION_COLUMN
-from .sources.writers import atomic_overwrite_parquet, drop_partition_dirs, list_partition_values
+from .schemas import CREATED_AT_COLUMN, VERSION_COLUMN
+from .sources.writers import drop_partition_dirs, list_partition_values
 from .versioning import content_version
-
-
-#: how long a read waits out another writer's metadata swap before raising
-_SWAP_WAIT_S = 10.0
-_SWAP_POLL_S = 0.005
 
 
 def _utc_now_iso() -> str:
@@ -54,14 +49,14 @@ def _utc_now_iso() -> str:
     return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None).isoformat()
 
 
-def _dir_identity(path: str) -> tuple[int, int, int] | None:
-    """Inode and mtime/ctime of a directory: every atomic swap changes it.
-    None while the directory does not exist."""
-    try:
-        st = os.stat(path)
-    except FileNotFoundError:
-        return None
-    return (st.st_ino, st.st_mtime_ns, st.st_ctime_ns)
+def _apply(rows: list[dict[str, Any]], record: dict[str, Any]) -> list[dict[str, Any]]:
+    """Fold one log record into the metadata rows: a ``put`` replaces the
+    row of its version (INSERT OR REPLACE), a ``drop`` removes versions."""
+    if record["op"] == "put":
+        row = record["row"]
+        return [r for r in rows if r[VERSION_COLUMN] != row[VERSION_COLUMN]] + [row]
+    gone = set(record["versions"])
+    return [r for r in rows if r[VERSION_COLUMN] not in gone]
 
 
 def _newest_first(rows: list[dict[str, Any]]) -> list[dict[str, Any]]:
@@ -92,19 +87,21 @@ class FeatureStore:
         self.spark = spark
         self.path = path
         self.features_path = os.path.join(path, "features")
-        self.metadata_path = os.path.join(path, "feature_metadata")
+        self.log_path = os.path.join(path, "_log")
         self.cache = cache or InMemoryTTLCache()
         self.validator = validator or DataQualityValidator()
         self.cache_ttl = cache_ttl  # reference hardcodes 3600 (`:350, :412`)
         self.monitor = FeatureMonitor(alert_threshold=alert_threshold)
         self.sort_col = sort_within_partitions_by
         self.max_serving_index_rows = max_serving_index_rows
-        # metadata catalog: (identity of the directory the rows were read
-        # from or written to, rows newest first); replaced as one tuple so
-        # lock-free readers never see a torn pair
-        self._catalog: tuple[tuple[int, int, int] | None, list[dict[str, Any]]] | None = None
-        self._catalog_lock = threading.RLock()
-        os.makedirs(path, exist_ok=True)
+        legacy = os.path.join(path, "feature_metadata")
+        if os.path.isdir(legacy) and not os.path.isdir(self.log_path):
+            raise ValueError(f"{legacy} is a parquet metadata table; this store reads {self.log_path}")
+        os.makedirs(self.log_path, exist_ok=True)
+        # catalog: (next log sequence number, rows folded from the records
+        # before it, newest first); one tuple, so readers never see a torn pair
+        self._catalog: tuple[int, list[dict[str, Any]]] = (0, [])
+        self._catalog_lock = threading.Lock()
 
     # ------------------------------------------------------------------ K1
     def register_features(
@@ -112,6 +109,10 @@ class FeatureStore:
     ) -> str:
         """Validate → content-hash → stamp → append partition → metadata upsert
         → monitor → cache (reference `:295-353`).
+
+        Re-registering a committed version writes no rows (they keep their
+        first ``created_at``); its metadata takes the new stamp, so it becomes
+        latest again, as with the reference's upsert.
 
         Unlike the reference — which inserts whatever columns the frame has
         (`:320-321`, schema effectively trusted) — declared ``features_config``
@@ -146,18 +147,22 @@ class FeatureStore:
             # time-travels to rows that self-describe a different creation
             # time (r9 review).
             created_at = metadata.created_at or _utc_now_iso()
-            stamped = features.withColumn(VERSION_COLUMN, F.lit(version)).withColumn(
-                CREATED_AT_COLUMN, F.lit(created_at)
-            )
-            if self.sort_col and self.sort_col in features.columns:
-                # sort within output files so parquet row-group min/max
-                # stats make later user_id point-lookups skip row groups
-                # (the scalable stand-in for the reference's intended
-                # INDEX(user_id))
-                stamped = stamped.sortWithinPartitions(self.sort_col)
-            stamped.write.mode("append").partitionBy(VERSION_COLUMN).parquet(
-                self.features_path
-            )
+            if all(r[VERSION_COLUMN] != version for r in self._metadata_rows()):
+                stamped = features.drop(VERSION_COLUMN).withColumn(
+                    CREATED_AT_COLUMN, F.lit(created_at)
+                )
+                if self.sort_col and self.sort_col in features.columns:
+                    # sort within output files so parquet row-group min/max
+                    # stats make later user_id point-lookups skip row groups
+                    # (the scalable stand-in for the reference's intended
+                    # INDEX(user_id))
+                    stamped = stamped.sortWithinPartitions(self.sort_col)
+                # into the version's own directory: concurrent publishes into
+                # features/ would share one Hadoop _temporary, and the first
+                # job commit deletes it under the other (TASK_WRITE_FAILED)
+                stamped.write.mode("append").parquet(
+                    os.path.join(self.features_path, f"{VERSION_COLUMN}={version}")
+                )
 
             # stamp a COPY — mutating the caller's object made a REUSED
             # FeatureMetadata carry the first registration's created_at into
@@ -179,7 +184,8 @@ class FeatureStore:
                 created_at=created_at,
                 data_quality_metrics=metrics,
             )
-            self._upsert_metadata(stamped_meta)
+            # A5: INSERT OR REPLACE = one ``put`` record in the log
+            self._commit(lambda _rows: {"op": "put", "row": stamped_meta.to_dict()})
 
             n_rows = features.count()
             self.monitor.log_feature_creation(version, n_rows, metrics.overall_score)
@@ -211,84 +217,71 @@ class FeatureStore:
         if problems:
             raise ValueError("feature schema mismatch: " + "; ".join(problems))
 
-    def _upsert_metadata(self, metadata: FeatureMetadata) -> None:
-        """A5: INSERT OR REPLACE ≈ filter-out + append + atomic overwrite."""
-        with self._catalog_lock:
-            rows = [r for r in self._metadata_rows() if r[VERSION_COLUMN] != metadata.feature_version]
-            self._write_metadata(rows + [metadata.to_dict()])
-
-    def _write_metadata(self, rows: list[dict[str, Any]]) -> None:
-        """Write-through, under ``_catalog_lock``: swap the table in, then
-        install the same rows as the catalog under the new directory's
-        identity. SINGLE-WRITER, like the swap itself: a second writer
-        swapping between our rename and our stat would leave this handle's
-        catalog describing our rows."""
-        atomic_overwrite_parquet(
-            self.spark.createDataFrame(rows, schema=METADATA_SCHEMA), self.metadata_path
-        )
-        self._catalog = (_dir_identity(self.metadata_path), _newest_first(rows))
-
-    def _read_metadata(self) -> DataFrame | None:
-        if not os.path.isdir(self.metadata_path):
-            return None
-        return self.spark.read.schema(METADATA_SCHEMA).parquet(self.metadata_path)
+    def _record_path(self, seq: int) -> str:
+        return f"{self.log_path}{os.sep}{seq:020d}.json"
 
     def _metadata_rows(self) -> list[dict[str, Any]]:
         """The metadata table, newest first, answered from the catalog.
 
-        Every call stats the directory (microseconds) and trusts the catalog
-        only while the identity is the one it was written or read under, so
-        a publish from another handle or process shows on the next call.
-        While the directory is missing — another writer between its two
-        renames — the catalog (the table before that swap) answers. Without
-        a catalog, a missing directory is an empty store unless a
-        ``.tmp-*``/``.old-*`` sibling shows a swap in flight, which is
-        waited out rather than reported as empty."""
-        deadline = time.monotonic() + _SWAP_WAIT_S
+        Every call checks whether the next log record exists, with one
+        ``access`` call (under a microsecond, and no exception raised when it
+        is absent): while it is absent the catalog is current, so a commit
+        from another handle or process shows on the next call. A new handle
+        starts from record 0, so its first call folds the whole log."""
+        seq, rows = self._catalog
+        if not os.access(self._record_path(seq), os.F_OK):
+            return rows
+        with self._catalog_lock:
+            return self._catch_up()[1]
+
+    def _catch_up(self) -> tuple[int, list[dict[str, Any]]]:
+        """Under ``_catalog_lock``: fold every record from the catalog's next
+        sequence number on. Records appear whole (see :meth:`_commit`), and
+        in sequence order, so the first absent number ends the log."""
+        seq, rows = self._catalog
         while True:
-            ident = _dir_identity(self.metadata_path)
-            catalog = self._catalog
-            if catalog is not None and (ident is None or catalog[0] == ident):
-                return catalog[1]
-            if ident is None and not self._swap_in_flight():
-                return []
-            with self._catalog_lock:  # also waits out a write-through on this handle
-                if self._catalog is not catalog:
-                    continue  # a write-through or reload landed meanwhile
-                rows = self._reload_catalog(ident) if ident is not None else None
-            if rows is not None:
-                return rows
-            if time.monotonic() > deadline:
-                raise RuntimeError(
-                    f"{self.metadata_path} kept changing or stayed missing beside a "
-                    f"swap leftover for {_SWAP_WAIT_S} s; if no writer is running, "
-                    "rename the .old-* sibling back to recover the table"
-                )
-            time.sleep(_SWAP_POLL_S)
+            try:
+                with open(self._record_path(seq)) as fh:
+                    record = json.load(fh)
+            except FileNotFoundError:
+                break
+            rows = _apply(rows, record)
+            seq += 1
+        if seq != self._catalog[0]:
+            self._catalog = (seq, _newest_first(rows))
+        return self._catalog
 
-    def _reload_catalog(self, ident: tuple[int, int, int]) -> list[dict[str, Any]] | None:
-        """One Spark read of the directory; None if it was swapped meanwhile
-        (the rows could be either table's, or the read lost its files)."""
-        try:
-            meta = self._read_metadata()
-            rows = None if meta is None else [r.asDict(recursive=True) for r in meta.collect()]
-        except (PySparkException, Py4JJavaError):
-            # a swap removed the files Spark listed; any other failure is real
-            if _dir_identity(self.metadata_path) != ident:
-                return None
-            raise
-        if rows is None or _dir_identity(self.metadata_path) != ident:
-            return None
-        rows = _newest_first(rows)
-        self._catalog = (ident, rows)
-        return rows
-
-    def _swap_in_flight(self) -> bool:
-        name = os.path.basename(self.metadata_path)
-        try:
-            return any(n.startswith((f"{name}.tmp-", f"{name}.old-")) for n in os.listdir(self.path))
-        except FileNotFoundError:
-            return False
+    def _commit(
+        self, make_record: Callable[[list[dict[str, Any]]], dict[str, Any] | None]
+    ) -> dict[str, Any] | None:
+        """Append one record to the log, put-if-absent: it is written and
+        fsynced under a ``.tmp-*`` name, then hard-linked to the next
+        sequence number, so no reader sees a partial record. The link fails
+        with EEXIST when another handle or process took that number; then
+        the catalog catches up and ``make_record`` — given the current rows,
+        newest first — builds the record again for the next number. Returns
+        the committed record, or None when ``make_record`` returns None."""
+        tmp = os.path.join(self.log_path, f".tmp-{uuid.uuid4().hex}")
+        with self._catalog_lock:
+            try:
+                while True:
+                    seq, rows = self._catch_up()
+                    record = make_record(rows)
+                    if record is None:
+                        return None
+                    with open(tmp, "w") as fh:
+                        json.dump(record, fh)
+                        fh.flush()
+                        os.fsync(fh.fileno())
+                    try:
+                        os.link(tmp, self._record_path(seq))
+                    except FileExistsError:
+                        continue
+                    self._catalog = (seq + 1, _newest_first(_apply(rows, record)))
+                    return record
+            finally:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
 
     # ------------------------------------------------------------------ K2
     def latest_version(self) -> str | None:
@@ -476,9 +469,9 @@ class FeatureStore:
         `:350,412`) — so a version's cached frames can lag the DB's rows
         for that version by up to 3600 s. Here that window is ZERO: the
         serving index is version-scoped, ``latest_version()`` resolves
-        from a metadata catalog that is written through on every publish
-        and checked against the metadata directory's identity on every
-        call, and re-registration rebuilds the index — a stale index
+        from a metadata catalog that every call brings up to date with the
+        commit log (one stat while no new record exists), and
+        re-registration rebuilds the index — a stale index
         can only be served if it is planted under the new version's key,
         which this audit detects as a full-sample mismatch
         (``test_serving_parity_audit_detects_stale_cache_epoch``)."""
@@ -556,17 +549,20 @@ class FeatureStore:
 
     # ------------------------------------------------------------------ K6
     def cleanup_old_versions(self, keep_n: int = 5) -> list[str]:
-        """Keep newest N versions (reference `:503-528`). Files go last: the
-        kept metadata rows are written first (through the same atomic
-        overwrite as the upsert), so no resolution returns a doomed version
-        from then on; then the cache is evicted; then the partition
-        directories are dropped — no data rewrite."""
-        with self._catalog_lock:
-            rows = self._metadata_rows()  # newest first
-            doomed = [r[VERSION_COLUMN] for r in rows[keep_n:]]
-            if not doomed:
-                return []
-            self._write_metadata(rows[:keep_n])
+        """Keep newest N versions (reference `:503-528`). Files go last: a
+        ``drop`` record is committed first, so no resolution returns a
+        doomed version from then on; then the cache is evicted; then the
+        partition directories are dropped — no data rewrite. The doomed set
+        is worked out again whenever another writer's commit lands first."""
+
+        def drop(rows: list[dict[str, Any]]) -> dict[str, Any] | None:
+            doomed = [r[VERSION_COLUMN] for r in rows[keep_n:]]  # rows are newest first
+            return {"op": "drop", "versions": doomed} if doomed else None
+
+        record = self._commit(drop)
+        if record is None:
+            return []
+        doomed = record["versions"]
         for v in doomed:
             delete_prefix = getattr(self.cache, "delete_prefix", None)
             if delete_prefix is not None:

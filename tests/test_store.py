@@ -136,6 +136,17 @@ def test_register_identical_content_is_idempotent_version(store, features):
     v1 = store.register_features(features, _meta("one"))
     v2 = store.register_features(features, _meta("two"))
     assert v1 == v2  # content-addressed: same content ⇒ same id
+    # the committed rows are not appended a second time
+    assert store.get_features(v1).count() == 5
+    # the re-registration's upsert still makes its version latest again
+    vb = store.register_features(
+        features.withColumn("total_amount", F.col("total_amount") + 1.0), _meta("b")
+    )
+    assert store.latest_version() == vb
+    assert store.register_features(features, _meta("three")) == v1
+    assert store.latest_version() == v1
+    assert store.get_features(v1).count() == 5
+    assert [v["description"] for v in store.list_feature_versions()] == ["three", "b"]
 
 
 def test_dashboard_shape(store, features):
@@ -269,7 +280,7 @@ def test_time_travel_read(spark, tmp_path, features):
 
     store = FeatureStore(spark, str(tmp_path / "fs"))
     v1 = store.register_features(features, _meta("v1"))
-    between = store._read_metadata().agg(F.max("created_at")).collect()[0][0]
+    between = store.get_feature_metadata(v1).created_at
     _time.sleep(1.1)  # created_at has second resolution
     more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
     v2 = store.register_features(more, _meta("v2"))
@@ -638,3 +649,99 @@ def test_register_leaves_caller_persisted_frame_cached(store):
     plain = spark.createDataFrame([(1, 5.0)], "user_id long, x double")
     store.register_features(plain, _meta("plain"))
     assert plain.storageLevel == StorageLevel.NONE
+
+
+def test_concurrent_writers_on_two_handles_lose_no_commit(spark, tmp_path):
+    """Two handles on one path publish at the same time: every commit lands
+    in the log, so both handles and a fresh one list all 8 versions, and a
+    retention from a third handle leaves the 2 newest on all of them."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "fs_writers")
+    handles = [FeatureStore(spark, path), FeatureStore(spark, path)]
+    frames = [
+        [
+            spark.createDataFrame(
+                [(u, float(100 * h + 10 * i + u)) for u in range(4)], "user_id long, x double"
+            )
+            for i in range(4)
+        ]
+        for h in range(2)
+    ]
+    rounds = threading.Barrier(2, timeout=120)
+    published: list[str] = []
+    errors: list[Exception] = []
+
+    def publish(h: int) -> None:
+        try:
+            for i, df in enumerate(frames[h]):
+                rounds.wait()  # both handles commit in the same round
+                published.append(handles[h].register_features(df, _meta(f"h{h} v{i}")))
+        except Exception as e:  # any raise fails the test
+            errors.append(e)
+            rounds.abort()
+
+    threads = [threading.Thread(target=publish, args=(h,)) for h in range(2)]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(set(published)) == 8
+
+    listings = [
+        [v["feature_version"] for v in s.list_feature_versions()]
+        for s in (*handles, FeatureStore(spark, path))
+    ]
+    assert sorted(listings[0]) == sorted(published)
+    assert listings[1] == listings[0] and listings[2] == listings[0]
+
+    doomed = FeatureStore(spark, path).cleanup_old_versions(keep_n=2)
+    assert sorted(doomed) == sorted(listings[0][2:])
+    for s in (*handles, FeatureStore(spark, path)):
+        assert [v["feature_version"] for v in s.list_feature_versions()] == listings[0][:2]
+        assert s.latest_version() == listings[0][0]
+
+
+def test_open_refuses_a_parquet_metadata_table(spark, tmp_path):
+    """A store whose metadata is a ``feature_metadata/`` table and not a
+    commit log must not open as an empty store."""
+    path = tmp_path / "fs_old"
+    (path / "feature_metadata").mkdir(parents=True)
+    with pytest.raises(ValueError, match="feature_metadata"):
+        FeatureStore(spark, str(path))
+
+
+def test_concurrent_access_counts_lose_no_increment():
+    """Serving threads share one monitor: every access is counted."""
+    import sys
+    import threading
+
+    from ml_feature_store_pipeline_spark.monitor import FeatureMonitor
+
+    monitor = FeatureMonitor()
+
+    def hammer() -> None:
+        for _ in range(5_000):
+            monitor.log_feature_access("v")
+
+    threads = [threading.Thread(target=hammer) for _ in range(8)]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    metrics = monitor.get_metrics()
+    assert metrics["access_counts"] == {"v": 40_000}
+    assert metrics["total_accesses"] == 40_000
